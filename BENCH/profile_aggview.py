@@ -4,7 +4,10 @@ Round-3 verdict item #4: the query's 11.9s median is the most expensive
 gated entry; the suspected cost is job-count x the ~0.15-0.25s/job
 scheduling floor on the merge+refresh cycle.  This script re-runs the
 exact suite shape with a job-counting listener and per-phase timers so
-the next lever targets the measured dominant term.
+the next lever targets the measured dominant term.  The per-layer
+breakdown of a single refresh (``aggview.refresh_s``,
+``aggview.refresh_jobs``) comes from the traced perfbench run
+(``perfbench/run.py --trace 1``).
 
 Usage: python BENCH/profile_aggview.py [sf_dir]
 """

@@ -33,10 +33,9 @@ the pruning decision under ``"rescan"`` (None when no rescan ran).  The
 level maintenance itself is pure DataFrame logic riding the merge DAG —
 no extra Spark action, no collect.
 
-Exactly-once, like the mirror (``lake/mirror.py``): the view stores
-``aggview_upstream_version`` in its own manifest properties and advances
-it in the SAME atomic commit as the merged deltas; the merge's batch-id
-replay guard makes a re-run of a completed refresh a no-op.
+Spec, watermark (``aggview_upstream_version``), bootstrap and the
+exactly-once refresh commit follow the shared view protocol
+(``lake/view.py``).
 
 Scale: a refresh costs O(changed rows) + one bucket-pruned read of the
 CURRENT view restricted to the touched groups (delta group keys are
@@ -54,16 +53,30 @@ from __future__ import annotations
 
 import json
 import os
-import time
-from contextlib import contextmanager
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from datax_spark.lake.merge import merge_into
-from datax_spark.lake.table import DELTA_KINDS, LakeTable
+from datax_spark.lake.table import LakeTable
+from datax_spark.lake.view import (
+    _RESCAN_PUSHDOWN_CAP,
+    _bcast,
+    _pin,
+    _static_planning_if_small,
+    bootstrap_overwrite,
+    churn,
+    create_or_resume,
+    in_pushdown,
+    in_static_scope,
+    join_on,
+    lag,
+    read_spec,
+    watermark,
+)
 
 WATERMARK_PROP = "aggview_upstream_version"
 SPEC_PROP = "aggview_spec"
@@ -72,10 +85,6 @@ _ORDER = "__aggview_order"
 # how many distinct best-value levels each min/max tracks by default; the
 # depth of the retraction buffer before a rescan is ever needed
 _DEFAULT_LEVELS_K = 8
-# rescan groups at or under this count get their keys pushed into the
-# snapshot scan as an isin() filter (row-group pruning); above it, the
-# broadcast semi join alone restricts the pass
-_RESCAN_PUSHDOWN_CAP = 256
 
 # views at or under this many manifest bytes take the FUSED-STATS refresh:
 # the whole (tiny) view is read unpruned and one aggregate action yields
@@ -92,12 +101,7 @@ _SUMMABLE = (
 
 
 def _spec(view: LakeTable) -> dict:
-    raw = view.manifest().properties.get(SPEC_PROP)
-    if raw is None:
-        raise ValueError(
-            "table has no aggview spec — create it with create_agg_view()"
-        )
-    return json.loads(raw)
+    return read_spec(view, SPEC_PROP, "aggview", "create_agg_view")
 
 
 def _sum_type(dt: T.DataType) -> T.DataType:
@@ -153,10 +157,7 @@ def _ns_join(left: DataFrame, right: DataFrame, dims: list[str],
         *[F.col(d).alias(f"__j_{d}") for d in dims],
         *[F.col(c) for c in right.columns if c not in dims],
     )
-    cond = None
-    for d in dims:
-        e = left[d].eqNullSafe(F.col(f"__j_{d}"))
-        cond = e if cond is None else (cond & e)
+    cond = join_on((left[d], F.col(f"__j_{d}")) for d in dims)
     return left.join(r, on=cond, how=how).drop(*[f"__j_{d}" for d in dims])
 
 
@@ -204,9 +205,8 @@ def create_agg_view(
     docstring).  ``levels_k`` trades hidden-state size for rescan
     avoidance depth.
 
-    Like ``bootstrap_mirror``, bootstrap is two commits (overwrite, then
-    watermark) — a crash between them leaves no watermark and bootstrap is
-    simply re-run."""
+    Bootstrap is the shared two-commit, crash-resumable one
+    (``lake/view.py``)."""
     sums = list(sums or [])
     mins = list(mins or [])
     maxs = list(maxs or [])
@@ -234,43 +234,18 @@ def create_agg_view(
             pub, arr = _names(agg, c)
             fields.append(T.StructField(pub, by_name[c].dataType))
             fields.append(T.StructField(arr, _lv_type(by_name[c].dataType)))
-    try:
-        view = LakeTable.create(
-            upstream.spark,
-            location,
-            schema=T.StructType(fields),
-            key_cols=list(dims),
-            bucket_col=dims[0],
-            num_buckets=num_buckets,
-        )
-    except FileExistsError:
-        # a prior bootstrap crashed between overwrite and the spec/
-        # watermark commit: the table exists but carries no spec — resume
-        # the bootstrap on it.  A table WITH a spec is a live view and
-        # re-creating it is refused.
-        view = LakeTable(upstream.spark, location)
-        if view.manifest().properties.get(SPEC_PROP) is not None:
-            raise FileExistsError(
-                f"aggregate view already exists at {location}"
-            ) from None
+    view = create_or_resume(
+        upstream.spark, location, SPEC_PROP, "aggregate view",
+        schema=T.StructType(fields), key_cols=list(dims),
+        bucket_col=dims[0], num_buckets=num_buckets,
+    )
     at = upstream.current_version() if version is None else version
     if at > 0:
         out_types = {f.name: f.dataType for f in fields}
-        # bootstrap takes the same scoped static planning as a small
-        # refresh, sized on the SNAPSHOT's manifest bytes: on a small
-        # upstream the one-shot aggregate is a handful of tiny shuffles
-        # where AQE's per-exchange jobs dominate wall-clock
-        snap_bytes = sum(
-            upstream._entry_bytes(e)
-            for es in upstream.manifest(at).files.values()
-            for e in es
-        )
-        with _static_planning_if_small(upstream.spark, snap_bytes):
-            view.overwrite(
-                _aggregate(upstream.read(version=at), dims, sums, out_types,
-                           mins, maxs, levels_k)
-                .select(*[f.name for f in fields])
-            )
+        bootstrap_overwrite(view, [(upstream, at)], lambda: _aggregate(
+            upstream.read(version=at), dims, sums, out_types, mins, maxs,
+            levels_k,
+        ).select(*[f.name for f in fields]))
     view.set_properties(**{
         WATERMARK_PROP: int(at),
         SPEC_PROP: json.dumps(
@@ -286,60 +261,8 @@ def view_lag(upstream: LakeTable, view: LakeTable) -> dict:
     and seconds behind (commit-timestamp delta).  Monitoring surface for
     refresh scheduling."""
     _spec(view)  # raises on non-view tables
-    wm = int(view.manifest().properties[WATERMARK_PROP])
-    return {"view_watermark": wm, **upstream.commit_lag(wm)}
-
-
-def _churn_stats(
-    upstream: LakeTable, from_v: int, to_v: int,
-) -> tuple[float, int]:
-    """``(ratio, changed_bytes)``: bytes of logical-change files added in
-    ``(from_v, to_v]`` over the snapshot bytes at ``from_v`` — the refresh
-    cost model's input, derived
-    purely from manifests (ZERO Spark jobs).  Physical rewrites
-    (compact/rebucket) add no logical change and are skipped, mirroring
-    ``read_changes``/``changed_buckets``.
-
-    The denominator is a LIVE-SIZE FLOOR: base-kind bytes plus the largest
-    single change layer in the table's history.  Summing every delta layer
-    would inflate the denominator on an un-compacted MOR history where the
-    same keys churn layer after layer (live rows ≈ one layer, file bytes ≈
-    n layers) and starve the recompute path exactly where it wins; the
-    max single layer is immune to that re-churn inflation, and for
-    append-heavy histories the biggest layer (the bootstrap load) still
-    anchors the estimate.  A compacted table keeps it tight either way."""
-    mfrom = upstream.manifest(from_v)
-    base_bytes = 0
-    layer_bytes: dict[int, int] = {}
-    for es in mfrom.files.values():
-        for e in es:
-            if len(e) > 2 and e[2] in (*DELTA_KINDS, "dv"):
-                continue
-            base_bytes += upstream._entry_bytes(e)
-    # per-commit logical-change layer sizes over the WHOLE history up to
-    # from_v (for the max-layer floor), then over the refresh range (the
-    # numerator).  Physical rewrites (compact/rebucket) are skipped.
-    prev: set = set()
-    for v in range(1, to_v + 1):
-        m = upstream.manifest(v)
-        cur = {e[0] for es in m.files.values() for e in es}
-        if m.operation not in ("create", "properties", "compact", "rebucket"):
-            layer_bytes[v] = sum(
-                upstream._entry_bytes(e)
-                for es in m.files.values() for e in es
-                if e[0] not in prev
-            )
-        prev = cur
-    changed = sum(b for v, b in layer_bytes.items() if v > from_v)
-    hist_max = max(
-        (b for v, b in layer_bytes.items() if v <= from_v), default=0
-    )
-    # max, not sum: after compaction the biggest layer's rows live in the
-    # base — adding them would double-count
-    snap_bytes = max(base_bytes, hist_max)
-    if snap_bytes <= 0:
-        return float("inf"), changed
-    return changed / snap_bytes, changed
+    wm = watermark(view, WATERMARK_PROP, "create_agg_view")
+    return lag(upstream, wm, view_watermark=wm)
 
 
 def _maintain_levels(
@@ -371,10 +294,7 @@ def _maintain_levels(
         *[F.col(d).alias(f"__h_{d}") for d in dims],
         F.element_at(F.col(arr), -1)["v"].alias("__H"),
     )
-    jc = None
-    for d in dims:
-        e = contrib[d].eqNullSafe(F.col(f"__h_{d}"))
-        jc = e if jc is None else (jc & e)
+    jc = join_on((contrib[d], F.col(f"__h_{d}")) for d in dims)
     inside = (F.col(c) <= F.col("__H")) if asc else (F.col(c) >= F.col("__H"))
     clv = (
         contrib.join(_bcast(hz), on=jc, how="left")
@@ -402,161 +322,7 @@ def _maintain_levels(
     )
 
 
-# change layers at or under this size take STATIC planning (AQE off for
-# the refresh's actions, restored after): AQE's runtime re-planning pays
-# for itself on big shuffles, but on a small refresh batch it only
-# multiplies the per-exchange job count — measured 40 vs 15 Spark jobs
-# (3× wall-clock at the tiny-data job floor) on a 0.3% churn refresh.
-# At 100-TB steady state a batch's change layer exceeds this and AQE
-# stays on for skew splits / partition coalescing.
-_STATIC_PLAN_MAX_BYTES = 64 << 20
-
-
-# shuffle width for a small refresh's static plans: with AQE off every
-# exchange materializes at the session's full spark.sql.shuffle.partitions
-# (e.g. 32) even when the refresh moves a few thousand rows — the refresh
-# pipeline has many exchanges (changelog winners, delta fold, level
-# windows), so tiny-task scheduling overhead multiplies.  AQE would
-# coalesce these to ~1 partition but pays its own replan jobs; a fixed
-# small width is the static equivalent.  Only plans compiled inside the
-# scope are affected; the session value is restored on exit.
-_STATIC_PLAN_SHUFFLE_PARTITIONS = 1
-
-
-# True while compiling plans inside the static scope.  Used by ``_bcast``:
-# EVERY broadcast join materializes its build side as a SEPARATE Spark job
-# (the broadcast-exchange job), and the refresh pipeline carries many small
-# joins (delta keys, per-extremum level tops, horizons, rescan keys) — at
-# the ~0.15-0.25s/job scheduling floor those build jobs, not the data,
-# dominated a small refresh (measured 15 jobs ≈ 3.8s warm where the plan
-# has ~2 real actions).  Inside the static scope the same joins run as
-# narrow shuffle joins: extra STAGES inside the action's one job, each a
-# handful of 8-partition tasks — stages are ~ms, jobs are ~250ms.  At
-# production change-layer sizes the scope never engages and every hint
-# stays a real broadcast.
-_IN_STATIC_SCOPE = False
-
-
-def _bcast(df: DataFrame) -> DataFrame:
-    """Broadcast hint that defers to the static small-batch scope (above)."""
-    return df if _IN_STATIC_SCOPE else F.broadcast(df)
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Materialization for a frame referenced by several refresh branches.
-
-    Outside the static scope: ``persist()`` — recomputable, the right call
-    when the change layer is big.  Inside it: EAGER ``localCheckpoint()``,
-    which additionally TRUNCATES THE LOGICAL PLAN — measured to matter
-    more than job count on small refreshes: every downstream action
-    (deltas, per-extremum level pipelines, the stat aggregate, the merge)
-    re-runs Catalyst analysis + whole-stage codegen over the full
-    changelog-winners-snapshot tree, and because each refresh bakes new
-    literals (versions, file lists) into the plan, none of that compiles
-    from cache.  Rooting the branches at a LogicalRDD makes every
-    downstream plan shallow.  The recompute-on-failure loss is irrelevant
-    at this size (a failed refresh re-runs wholesale), and ``unpersist()``
-    frees checkpoint blocks the same way."""
-    return df.localCheckpoint(eager=True) if _IN_STATIC_SCOPE else df.persist()
-
-
-@contextmanager
-def _static_planning_if_small(spark, change_bytes: int | None):
-    """Scoped AQE toggle + narrow shuffle width + no-broadcast-joins for
-    small refresh batches — restored on any exit, no-op when the change
-    layer is big, unknown, or AQE is already off."""
-    global _IN_STATIC_SCOPE
-    key = "spark.sql.adaptive.enabled"
-    skey = "spark.sql.shuffle.partitions"
-    bkey = "spark.sql.autoBroadcastJoinThreshold"
-    if change_bytes is None or change_bytes > _STATIC_PLAN_MAX_BYTES:
-        yield
-        return
-    old = str(spark.conf.get(key, "true")).lower()
-    if old == "false":
-        yield
-        return
-    old_sp = spark.conf.get(skey, None)
-    # parse BEFORE touching any conf: a platform value like "auto" must
-    # not leave AQE disabled via an exception mid-toggle — unparsable
-    # widths just skip the narrowing and keep the AQE toggle alone
-    try:
-        sp_int = None if old_sp is None else int(old_sp)
-    except ValueError:
-        sp_int = None
-        old_sp = "__unparsable__"
-    narrow = (old_sp is None
-              or (sp_int is not None
-                  and sp_int > _STATIC_PLAN_SHUFFLE_PARTITIONS))
-    old_bt = spark.conf.get(bkey, None)
-    ckey = "spark.sql.codegen.wholeStage"
-    old_cg = spark.conf.get(ckey, None)
-    spark.conf.set(key, "false")
-    spark.conf.set(bkey, "-1")  # no auto-broadcast: keep joins in-job
-    # interpreted execution beats compiling: each refresh bakes fresh
-    # literals (versions, watermarks) into every generated class, so none
-    # compile from cache — at 5-row stage sizes the janino compile time
-    # IS the stage time
-    spark.conf.set(ckey, "false")
-    if narrow:
-        spark.conf.set(skey, str(_STATIC_PLAN_SHUFFLE_PARTITIONS))
-    prev_scope = _IN_STATIC_SCOPE
-    _IN_STATIC_SCOPE = True
-    try:
-        yield
-    finally:
-        _IN_STATIC_SCOPE = prev_scope
-        spark.conf.set(key, old)
-        if old_bt is not None:
-            spark.conf.set(bkey, old_bt)
-        else:
-            spark.conf.unset(bkey)
-        if old_cg is not None:
-            spark.conf.set(ckey, old_cg)
-        else:
-            spark.conf.unset(ckey)
-        if narrow:
-            if old_sp is not None:
-                spark.conf.set(skey, old_sp)
-            else:
-                spark.conf.unset(skey)
-
-
 def refresh_agg_view(
-    upstream: LakeTable,
-    view: LakeTable,
-    on_rewrite: str = "error",
-    mode: str = "cow",
-    auto_compact: int | None = 8,
-    recompute_ratio: float | None = 0.5,
-) -> dict:
-    """Public entry: size the refresh from the manifest diff (zero Spark
-    jobs) and run it under static planning when the change layer is small
-    (see ``_STATIC_PLAN_MAX_BYTES``); all semantics live in the impl."""
-    wm = view.manifest().properties.get(WATERMARK_PROP)
-    changed: int | None = None
-    if wm is not None:
-        to_v = upstream.current_version()
-        if to_v > int(wm):
-            changed = _churn_stats(upstream, int(wm), to_v)[1]
-    with _static_planning_if_small(upstream.spark, changed):
-        return _refresh_agg_view(
-            upstream, view, on_rewrite=on_rewrite, mode=mode,
-            auto_compact=auto_compact, recompute_ratio=recompute_ratio,
-        )
-
-
-def _trace(label, t0):
-    """Env-gated phase timer (DX_AGGVIEW_TRACE=1): prints the elapsed
-    wall-clock of each refresh phase — the breakdown that drove the
-    small-refresh static-scope work (BENCH/profile_aggview.py)."""
-    if os.environ.get("DX_AGGVIEW_TRACE"):
-        print(f"    TRACE {label:<22} {time.monotonic() - t0:6.2f}s",
-              flush=True)
-    return time.monotonic()
-
-
-def _refresh_agg_view(
     upstream: LakeTable,
     view: LakeTable,
     on_rewrite: str = "error",
@@ -579,7 +345,8 @@ def _refresh_agg_view(
     — the refresh is incremental (``mode: "incremental"``), costing
     O(changed rows), never O(upstream).  ``recompute_ratio=None`` forces
     incremental.  The decision input is zero-Spark-job manifest
-    arithmetic (``_churn_stats``).
+    arithmetic (``view.churn``), which also sizes the static planning
+    scope (``view._STATIC_PLAN_MAX_BYTES``).
 
     Default merge mode is COW, unlike the fact-table default (MOR): a
     rollup is small and read-hot, so rewriting the touched buckets
@@ -610,52 +377,66 @@ def _refresh_agg_view(
     Intra-range churn collapses for free: only the endpoint states
     matter."""
     spec = _spec(view)
+    from_v = watermark(view, WATERMARK_PROP, "create_agg_view")
+    to_v = upstream.current_version()
+    if to_v <= from_v:
+        return {"from_version": from_v, "to_version": from_v,
+                "groups": 0, "applied": False, "rescan": None, "mode": None}
+    ratio, changed = churn(upstream, from_v, to_v)
+    with _static_planning_if_small(upstream.spark, changed):
+        if recompute_ratio is not None and ratio >= recompute_ratio:
+            return _recompute(upstream, view, spec, from_v, to_v)
+        return _refresh_incremental(upstream, view, spec, from_v, to_v,
+                                    on_rewrite, mode, auto_compact)
+
+
+def _recompute(upstream: LakeTable, view: LakeTable, spec: dict,
+               from_v: int, to_v: int) -> dict:
+    """High churn: one aggregate over the to_v snapshot replaces the whole
+    incremental pipeline.  Two commits (overwrite, watermark),
+    crash-resumable like bootstrap: a crash between them leaves the stale
+    watermark and the deterministic recompute simply re-runs."""
+    fields = view.schema().fields
+    out_types = {f.name: f.dataType for f in fields}
+    state = _aggregate(
+        upstream.read(version=to_v), spec["dims"], spec["sums"], out_types,
+        spec.get("mins", []), spec.get("maxs", []),
+        int(spec.get("levels_k", _DEFAULT_LEVELS_K)),
+    ).select(*[f.name for f in fields])
+    m = view.overwrite(state)
+    # group count from the freshly written parquet footers — driver-side
+    # metadata reads, no second Spark action over the aggregate
+    n_groups = 0
+    for es in m.files.values():
+        for e in es:
+            try:
+                n_groups += pq.ParquetFile(
+                    os.path.join(view.location, e[0])
+                ).metadata.num_rows
+            except OSError:
+                pass
+    view.set_properties(**{WATERMARK_PROP: int(to_v)})
+    return {"from_version": from_v, "to_version": to_v,
+            "groups": int(n_groups), "applied": True, "rescan": None,
+            "mode": "recompute"}
+
+
+def _refresh_incremental(
+    upstream: LakeTable, view: LakeTable, spec: dict, from_v: int,
+    to_v: int, on_rewrite: str, mode: str, auto_compact: int | None,
+) -> dict:
+    """Low churn: the net-state delta fold (see ``refresh_agg_view``)."""
     dims, sums = spec["dims"], spec["sums"]
     mins = spec.get("mins", [])
     maxs = spec.get("maxs", [])
     levels_k = int(spec.get("levels_k", _DEFAULT_LEVELS_K))
     ext = [("min", c, True) for c in mins] + [("max", c, False) for c in maxs]
-    wm = view.manifest().properties.get(WATERMARK_PROP)
-    if wm is None:
-        raise ValueError("view has no watermark — use create_agg_view()")
-    from_v = int(wm)
-    to_v = upstream.current_version()
-    if to_v <= from_v:
-        return {"from_version": from_v, "to_version": from_v,
-                "groups": 0, "applied": False, "rescan": None, "mode": None}
 
-    if (recompute_ratio is not None
-            and _churn_stats(upstream, from_v, to_v)[0] >= recompute_ratio):
-        # high churn: one aggregate over the to_v snapshot replaces the
-        # whole incremental pipeline.  Two commits (overwrite, watermark),
-        # crash-resumable like bootstrap: a crash between them leaves the
-        # stale watermark and the deterministic recompute simply re-runs.
-        fields = view.schema().fields
-        out_types = {f.name: f.dataType for f in fields}
-        state = _aggregate(
-            upstream.read(version=to_v), dims, sums, out_types,
-            mins, maxs, levels_k,
-        ).select(*[f.name for f in fields])
-        m = view.overwrite(state)
-        # group count from the freshly written parquet footers — driver-side
-        # metadata reads, no second Spark action over the aggregate
-        import os as _os
-
-        import pyarrow.parquet as _pq
-
-        n_groups = 0
-        for es in m.files.values():
-            for e in es:
-                try:
-                    n_groups += _pq.ParquetFile(
-                        _os.path.join(view.location, e[0])
-                    ).metadata.num_rows
-                except OSError:
-                    pass
+    def advance_only() -> dict:
+        # every group change cancelled out: advance the watermark alone
         view.set_properties(**{WATERMARK_PROP: int(to_v)})
-        return {"from_version": from_v, "to_version": to_v,
-                "groups": int(n_groups), "applied": True, "rescan": None,
-                "mode": "recompute"}
+        return {"from_version": from_v, "to_version": to_v, "groups": 0,
+                "applied": False, "rescan": None, "mode": "incremental"}
 
     ukeys = list(upstream.manifest(to_v).key_cols)
     payload_cols = list(dict.fromkeys([*dims, *sums, *mins, *maxs]))
@@ -676,8 +457,7 @@ def _refresh_agg_view(
             ).alias("__win")
         )
     )
-    _t = time.monotonic()
-    if not _IN_STATIC_SCOPE:
+    if not in_static_scope():
         # big change layers: materialize once — the changelog scan + agg
         # is real IO referenced by both contrib branches.  In the static
         # (small-batch) scope the double in-job recompute costs ~ms while
@@ -685,7 +465,6 @@ def _refresh_agg_view(
         # scheduling floor — contrib's pin right below truncates the plan
         # for everything downstream anyway.
         winners = _pin(winners)
-        _t = _trace("pin winners", _t)
     changed = winners.select(*ukeys)
 
     new_rows = winners.filter(F.col("__win.__t") != "delete").select(
@@ -705,10 +484,7 @@ def _refresh_agg_view(
         # would have returned at that point anyway
         touched_b = upstream.changed_buckets(from_v, to_v)
         snap = upstream.read(version=from_v, buckets=touched_b)
-        cond = None
-        for c in ukeys:
-            e = snap[c].eqNullSafe(changed[c])
-            cond = e if cond is None else (cond & e)
+        cond = join_on((snap[c], changed[c]) for c in ukeys)
         old_rows = snap.join(changed, on=cond, how="left_semi").select(
             *payload_cols, F.lit(-1).alias("__w")
         )
@@ -719,7 +495,6 @@ def _refresh_agg_view(
             # maintained extremum's level pipeline — materialize instead
             # of re-folding the from_v snapshot per branch
             contrib = _pin(contrib)
-            _t = _trace("pin contrib", _t)
 
         weight = F.col("__w")
         delta_aggs = [F.sum(weight).cast("long").alias("__d_n")]
@@ -749,13 +524,12 @@ def _refresh_agg_view(
         for c in dict.fromkeys([*mins, *maxs]):
             keep = keep | (F.col(f"__hs_{c}") != 0)
         deltas = contrib.groupBy(*dims).agg(*delta_aggs).filter(keep)
-        if not (_IN_STATIC_SCOPE and ext):
+        if not (in_static_scope() and ext):
             # when contrib is already a pinned LocalRDD (static scope with
             # maintained extrema), deltas is one shallow hash-agg over it —
             # re-running it inside each downstream job costs ~ms while its
             # own eager checkpoint costs a job at the scheduling floor
             deltas = _pin(deltas)
-            _t = _trace("pin deltas", _t)
         m_view = view.manifest()
         bexpr = view.bucket_expr(m_view.bucket_col, m_view.num_buckets)
         view_bytes = sum(
@@ -778,20 +552,14 @@ def _refresh_agg_view(
             ).first()
             n_groups, touched = int(head["n"]), list(head["bs"])
             if n_groups == 0:
-                view.set_properties(**{WATERMARK_PROP: int(to_v)})
-                return {"from_version": from_v, "to_version": to_v,
-                        "groups": 0, "applied": False, "rescan": None,
-                        "mode": "incremental"}
+                return advance_only()
             cur = view.read(buckets=[b for b in touched if b is not None])
-        cond = None
         keys = deltas.select(
             *[F.col(c).alias(f"__k_{c}") for c in dims]
         ).distinct()
-        for c in dims:
-            e = cur[c].eqNullSafe(F.col(f"__k_{c}"))
-            cond = e if cond is None else (cond & e)
+        cond = join_on((cur[c], F.col(f"__k_{c}")) for c in dims)
         cur = cur.join(_bcast(keys), on=cond, how="left_semi")
-        if _IN_STATIC_SCOPE:
+        if in_static_scope():
             # referenced by the merged join, both level pipelines' stored-
             # level explodes AND their horizon frames — pin once so five
             # branches plan against one tiny LogicalRDD instead of five
@@ -799,13 +567,9 @@ def _refresh_agg_view(
             # this pin ADDS a job and ~0.35s — the re-scans cost more
             # than the checkpoint, unlike the winners/deltas pins.)
             cur = _pin(cur)
-            _t = _trace("pin cur", _t)
 
-        jcond = None
-        for c in dims:
-            e = deltas[c].eqNullSafe(cur[c])
-            jcond = e if jcond is None else (jcond & e)
-        merged = deltas.join(cur, on=jcond, how="left")
+        merged = deltas.join(
+            cur, on=join_on((deltas[c], cur[c]) for c in dims), how="left")
         # the level algebra per maintained extremum, joined in broadcast —
         # tops are bounded by the refresh's touched groups
         for agg, c, asc in ext:
@@ -816,10 +580,7 @@ def _refresh_agg_view(
                 *[F.col(d).alias(f"__t{tag}_{d}") for d in dims],
                 F.col("__ta").alias(f"__ta_{tag}"),
             )
-            tcond = None
-            for d in dims:
-                e = deltas[d].eqNullSafe(F.col(f"__t{tag}_{d}"))
-                tcond = e if tcond is None else (tcond & e)
+            tcond = join_on((deltas[d], F.col(f"__t{tag}_{d}")) for d in dims)
             merged = merged.join(_bcast(t), on=tcond, how="left")
 
         new_n = F.coalesce(cur["n_rows"], F.lit(0)) + F.col("__d_n")
@@ -860,13 +621,11 @@ def _refresh_agg_view(
         # monotonic LSN across refreshes for MOR last-writer-wins
         out_cols.append(F.lit(int(to_v)).alias(_ORDER))
         batch = merged.select(*out_cols)
-        _t = _trace("build batch plan", _t)
 
         rescan_plan = None  # scan_plan() of the level-exhausted pass
         batch_persisted = fused_stats or bool(ext)
         if batch_persisted:
             batch = _pin(batch)
-            _t = _trace("pin batch", _t)
         if fused_stats:
             # ONE aggregate action yields every planning stat the refresh
             # needs: group count (early exit), the batch's view buckets
@@ -890,14 +649,10 @@ def _refresh_agg_view(
                     ).alias("need")
                 )
             head = batch.agg(*stat_aggs).first()
-            _t = _trace("stat agg", _t)
             n_groups, touched = int(head["n"]), list(head["bs"])
             if n_groups == 0:
                 batch.unpersist()
-                view.set_properties(**{WATERMARK_PROP: int(to_v)})
-                return {"from_version": from_v, "to_version": to_v,
-                        "groups": 0, "applied": False, "rescan": None,
-                        "mode": "incremental"}
+                return advance_only()
         if ext:
             # groups whose known levels all emptied (bounded by the
             # refresh's group count; capped — beyond the cap the semi join
@@ -926,23 +681,14 @@ def _refresh_agg_view(
                 # Un-compacted (delta-holding) snapshots skip no files
                 # (non-key preds are MOR-unsafe, see _select_entries) —
                 # there the residual filter still prunes rows.
-                few = (len(need_rows) <= _RESCAN_PUSHDOWN_CAP
-                       and not any(v is None for r in need_rows for v in r))
-                snap_where = (
-                    [(c, "in", sorted({r[i] for r in need_rows}))
-                     for i, c in enumerate(dims)]
-                    if few else None
-                )
+                snap_where = in_pushdown(need_rows, dims)
                 rescan_plan = upstream.scan_plan(
                     where=snap_where, version=to_v)
                 snap2 = upstream.read(version=to_v, where=snap_where)
                 nk = need.select(
                     *[F.col(c).alias(f"__n_{c}") for c in dims]
                 )
-                scond = None
-                for c in dims:
-                    e = snap2[c].eqNullSafe(F.col(f"__n_{c}"))
-                    scond = e if scond is None else (scond & e)
+                scond = join_on((snap2[c], F.col(f"__n_{c}")) for c in dims)
                 snap_f = snap2.join(
                     _bcast(nk), on=scond, how="left_semi"
                 )
@@ -959,10 +705,7 @@ def _refresh_agg_view(
                     rs = _topk(snap_f, dims, c, asc, levels_k,
                                f"__rs_{pub}", f"__rs_{arr}")
                     rescanned = _ns_join(rescanned, rs, dims, "left")
-                rcond = None
-                for c in dims:
-                    e = batch[c].eqNullSafe(rescanned[c])
-                    rcond = e if rcond is None else (rcond & e)
+                rcond = join_on((batch[c], rescanned[c]) for c in dims)
                 joined = batch.join(_bcast(rescanned), on=rcond,
                                     how="left")
                 fixed = [batch[c].alias(c) for c in dims]
@@ -990,7 +733,6 @@ def _refresh_agg_view(
         batch_final = out
 
         try:
-            _t = _trace("pre merge", _t)
             m = merge_into(
                 view,
                 batch_final,
@@ -1052,6 +794,17 @@ DISTINCT_SPEC_PROP = "distinctview_spec"
 DISTINCT_WATERMARK_PROP = "distinctview_support_version"
 
 
+def _distinct_state(support: LakeTable, dims: list[str],
+                    col: str) -> DataFrame:
+    """Distinct counts from the support view's live groups, one-shot."""
+    return (
+        support.read()
+        .filter(F.col(col).isNotNull())
+        .groupBy(*[F.col(c) for c in dims])
+        .agg(F.count(F.lit(1)).alias(f"n_distinct_{col}"))
+    )
+
+
 def create_distinct_view(
     upstream: LakeTable,
     location: str,
@@ -1067,9 +820,8 @@ def create_distinct_view(
     Schema: dims + ``n_distinct_<col>`` (long).  Refresh with
     :func:`refresh_distinct_view`.
 
-    Same two-commit bootstrap contract as :func:`create_agg_view`: a crash
-    between the data overwrite and the spec/watermark commit leaves no
-    spec and the bootstrap is simply re-run."""
+    Same two-commit, crash-resumable bootstrap as every view
+    (``lake/view.py``)."""
     if col in dims:
         raise ValueError(f"column {col!r} cannot be both a dim and the "
                          "distinct-counted column")
@@ -1084,25 +836,12 @@ def create_distinct_view(
     out = f"n_distinct_{col}"
     fields = [T.StructField(c, by_name[c].dataType) for c in dims]
     fields.append(T.StructField(out, T.LongType()))
-    try:
-        view = LakeTable.create(
-            upstream.spark, location, schema=T.StructType(fields),
-            key_cols=list(dims), bucket_col=dims[0],
-            num_buckets=num_buckets,
-        )
-    except FileExistsError:
-        view = LakeTable(upstream.spark, location)
-        if view.manifest().properties.get(DISTINCT_SPEC_PROP) is not None:
-            raise FileExistsError(
-                f"distinct view already exists at {location}"
-            ) from None
-    state = (
-        support.read()
-        .filter(F.col(col).isNotNull())
-        .groupBy(*[F.col(c) for c in dims])
-        .agg(F.count(F.lit(1)).alias(out))
+    view = create_or_resume(
+        upstream.spark, location, DISTINCT_SPEC_PROP, "distinct view",
+        schema=T.StructType(fields), key_cols=list(dims),
+        bucket_col=dims[0], num_buckets=num_buckets,
     )
-    view.overwrite(state.select(*[f.name for f in fields]))
+    view.overwrite(_distinct_state(support, dims, col))
     view.set_properties(**{
         DISTINCT_WATERMARK_PROP: int(support.current_version()),
         DISTINCT_SPEC_PROP: json.dumps(
@@ -1128,18 +867,15 @@ def refresh_distinct_view(
     changelog range only if the commit itself didn't happen)."""
     from datax_spark.lake.merge import merge_builder
 
-    raw = view.manifest().properties.get(DISTINCT_SPEC_PROP)
-    if raw is None:
-        raise ValueError("table has no distinct-view spec — create it "
-                         "with create_distinct_view()")
-    spec = json.loads(raw)
+    spec = read_spec(view, DISTINCT_SPEC_PROP, "distinct-view",
+                     "create_distinct_view")
     dims, col = spec["dims"], spec["col"]
     out = f"n_distinct_{col}"
     if support is None:
         support = LakeTable(view.spark, spec["support_location"])
     sup = refresh_agg_view(upstream, support, mode=mode,
                            auto_compact=auto_compact)
-    wm = int(view.manifest().properties[DISTINCT_WATERMARK_PROP])
+    wm = watermark(view, DISTINCT_WATERMARK_PROP, "create_distinct_view")
     to_v = support.current_version()
     if to_v <= wm:
         return {"from_version": wm, "to_version": to_v, "applied": False,
@@ -1152,13 +888,7 @@ def refresh_distinct_view(
     safe_ops = ("append", "merge-mor", "properties", "create")
     if any(support.manifest(v).operation not in safe_ops
            for v in range(wm + 1, to_v + 1)):
-        state = (
-            support.read()
-            .filter(F.col(col).isNotNull())
-            .groupBy(*[F.col(c) for c in dims])
-            .agg(F.count(F.lit(1)).alias(out))
-        )
-        view.overwrite(state.select(*dims, out))
+        view.overwrite(_distinct_state(support, dims, col))
         view.set_properties(**{DISTINCT_WATERMARK_PROP: int(to_v)})
         return {"from_version": wm, "to_version": to_v, "applied": True,
                 "mode": "recompute", "support": sup}

@@ -28,8 +28,7 @@ Maintenance is exact and O(changed docs × tokens/doc), never O(corpus):
   aggregate (struct max — primitive buffer, whole-stage codegen), no
   window.
 - the merge carries upserts + tombstones and the watermark in ONE atomic
-  MOR commit, replay-guarded by batch id — the same exactly-once
-  protocol as the mirror / agg view / join view.
+  MOR commit — the shared exactly-once protocol of ``lake/view.py``.
 
 Bucketing by ``token`` makes ``lookup_postings`` a bucket-pruned point
 read; keep the index compacted with ``compact(sort_cols=["token"])`` and
@@ -45,10 +44,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datax_spark.lake.aggview import _static_planning_if_small
-from datax_spark.lake.joinview import _changed_bytes
 from datax_spark.lake.merge import merge_into
 from datax_spark.lake.table import LakeTable
+from datax_spark.lake.view import (
+    _static_planning_if_small,
+    bootstrap_overwrite,
+    change_bytes,
+    create_or_resume,
+    read_spec,
+    watermark,
+)
 
 WATERMARK_PROP = "indexview_upstream_version"
 SPEC_PROP = "indexview_spec"
@@ -61,13 +66,7 @@ _ORD = "__ix_ord"
 
 
 def _spec(view: LakeTable) -> dict:
-    raw = view.manifest().properties.get(SPEC_PROP)
-    if raw is None:
-        raise ValueError(
-            "table has no indexview spec — create it with "
-            "create_index_view()"
-        )
-    return json.loads(raw)
+    return read_spec(view, SPEC_PROP, "indexview", "create_index_view")
 
 
 def _postings(df: DataFrame, content_col: str, pattern: str,
@@ -97,8 +96,8 @@ def create_index_view(
     ``tf`` (the token's occurrence count in that document); keyed by all
     of them, bucketed by ``token``.
 
-    Two-commit bootstrap (overwrite, then spec+watermark) with the same
-    crash-resume contract as the agg/join views."""
+    Bootstrap is the shared two-commit, crash-resumable one
+    (``lake/view.py``)."""
     um = upstream.manifest()
     by_name = {f.name: f for f in um.schema.fields}
     if content_col not in by_name:
@@ -116,31 +115,17 @@ def create_index_view(
     fields = [T.StructField("token", T.StringType())]
     fields += [T.StructField(c, by_name[c].dataType) for c in um.key_cols]
     fields.append(T.StructField("tf", T.LongType()))
-    try:
-        view = LakeTable.create(
-            upstream.spark, location,
-            schema=T.StructType(fields),
-            key_cols=["token", *um.key_cols],
-            bucket_col="token",
-            num_buckets=num_buckets,
-        )
-    except FileExistsError:
-        view = LakeTable(upstream.spark, location)
-        if view.manifest().properties.get(SPEC_PROP) is not None:
-            raise FileExistsError(
-                f"index view already exists at {location}"
-            ) from None
+    view = create_or_resume(
+        upstream.spark, location, SPEC_PROP, "index view",
+        schema=T.StructType(fields), key_cols=["token", *um.key_cols],
+        bucket_col="token", num_buckets=num_buckets,
+    )
     at = upstream.current_version() if version is None else version
     if at > 0:
-        snap_bytes = sum(
-            upstream._entry_bytes(e)
-            for es in upstream.manifest(at).files.values() for e in es
-        )
-        with _static_planning_if_small(upstream.spark, snap_bytes):
-            view.overwrite(
-                _postings(upstream.read(version=at), content_col,
-                          token_pattern, list(um.key_cols))
-            )
+        bootstrap_overwrite(view, [(upstream, at)], lambda: _postings(
+            upstream.read(version=at), content_col, token_pattern,
+            list(um.key_cols),
+        ))
     view.set_properties(**{
         WATERMARK_PROP: int(at),
         SPEC_PROP: json.dumps({
@@ -161,13 +146,13 @@ def refresh_index_view(
     """Fold the upstream changes since the watermark into the index (see
     module docstring).  Re-running a completed refresh is a no-op."""
     spec = _spec(view)
-    wm = int(view.manifest().properties[WATERMARK_PROP])
+    wm = watermark(view, WATERMARK_PROP, "create_index_view")
     cur = upstream.current_version()
     if cur == wm:
         return {"from_version": wm, "to_version": cur, "applied": False}
     keys = list(spec["doc_keys"])
     with _static_planning_if_small(
-            upstream.spark, _changed_bytes(upstream, wm, cur)):
+            upstream.spark, change_bytes(upstream, wm, cur)):
         ch = upstream.read_changes_with_images(wm, cur,
                                                on_rewrite=on_rewrite)
         is_assert = F.col("_change_type").isin("insert", "update_after")
@@ -199,11 +184,9 @@ def refresh_index_view(
             lineage={"batch_id": f"idxv{cur}"},
             properties_update={WATERMARK_PROP: int(cur)},
         )
-    if mf is None:
-        # replayed refresh — the watermark already advanced atomically
-        # with the original merge
-        return {"from_version": wm, "to_version": cur, "applied": False}
-    return {"from_version": wm, "to_version": cur, "applied": True}
+    # not applied: a replayed refresh — the watermark already advanced
+    # atomically with the original merge
+    return {"from_version": wm, "to_version": cur, "applied": mf is not None}
 
 
 def search_bm25(

@@ -42,9 +42,8 @@ Refresh = exact partial recompute, never O(any table):
    scope), emit upserts for keys that now produce a row and tombstones
    for keys that no longer do;
 4. one MERGE into the view carries the rows AND advances every watermark
-   in the same atomic commit (``properties_update``), with the merge's
-   batch-id replay guard making a re-run of a completed refresh a no-op
-   — the same exactly-once protocol as the mirror and the agg view.
+   (one per upstream) — the shared exactly-once protocol of
+   ``lake/view.py``, which also pins each upstream's identity.
 
 Correctness note (why partial recompute is exact): the view's row for a
 fact key is a pure function of (current fact row for that key, current
@@ -69,14 +68,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datax_spark.lake.aggview import (
+from datax_spark.lake.merge import merge_into
+from datax_spark.lake.table import LakeTable
+from datax_spark.lake.view import (
     _RESCAN_PUSHDOWN_CAP,
     _bcast,
     _pin,
     _static_planning_if_small,
+    bootstrap_overwrite,
+    change_bytes,
+    check_tables,
+    create_or_resume,
+    in_pushdown,
+    join_on,
+    lag,
+    read_spec,
 )
-from datax_spark.lake.merge import merge_into
-from datax_spark.lake.table import LakeTable
 
 L_WATERMARK_PROP = "joinview_left_version"
 # JSON list, one watermark per dim in spec order
@@ -89,34 +96,7 @@ _ORD = "__jv_ord"
 
 
 def _spec(view: LakeTable) -> dict:
-    raw = view.manifest().properties.get(SPEC_PROP)
-    if raw is None:
-        raise ValueError(
-            "table has no joinview spec — create it with create_join_view()"
-        )
-    return json.loads(raw)
-
-
-def _check_tables(spec: dict, left: LakeTable,
-                  rights: list[LakeTable]) -> None:
-    """Refuse upstreams that are not the tables the view was created over,
-    in spec order.  Watermark COUNT alone can't catch two dims passed
-    swapped (or the wrong tables) whose key column names coincide — that
-    would silently fold dim A's changelog through dim B's join mapping.
-    Specs written before locations were recorded skip the check."""
-    exp = spec.get("left_location")
-    if exp is not None and os.path.abspath(left.location) != exp:
-        raise ValueError(
-            f"view was created over fact table {exp!r} but "
-            f"{left.location!r} was passed as the fact"
-        )
-    for i, (r, rt) in enumerate(zip(spec["rights"], rights)):
-        exp = r.get("location")
-        if exp is not None and os.path.abspath(rt.location) != exp:
-            raise ValueError(
-                f"rights[{i}] is {rt.location!r} but the view was created "
-                f"over {exp!r} — pass the SAME dim tables, in spec order"
-            )
+    return read_spec(view, SPEC_PROP, "joinview", "create_join_view")
 
 
 def _watermarks(view: LakeTable, n_rights: int) -> tuple[int, list[int]]:
@@ -139,30 +119,6 @@ def _wm_props(cl: int, crs: list[int]) -> dict:
     return out
 
 
-def _changed_bytes(table: LakeTable, from_v: int, to_v: int) -> int:
-    """Bytes of logical-change files added in ``(from_v, to_v]`` — the
-    static-planning cost input, derived purely from manifests (zero Spark
-    jobs).  Physical rewrites (compact/rebucket) add no logical change."""
-    total = 0
-    prev = {
-        e[0]
-        for es in table.manifest(from_v).files.values()
-        for e in es
-    }
-    for v in range(from_v + 1, to_v + 1):
-        m = table.manifest(v)
-        cur = {e[0] for es in m.files.values() for e in es}
-        if m.operation not in ("create", "properties", "compact",
-                               "compact-minor", "rebucket"):
-            total += sum(
-                table._entry_bytes(e)
-                for es in m.files.values() for e in es
-                if e[0] not in prev and not (len(e) > 2 and e[2] == "dv")
-            )
-        prev = cur
-    return total
-
-
 def _joined(left_df: DataFrame, right_dfs: list[DataFrame],
             spec: dict) -> DataFrame:
     """The view's defining query over the fact frame and one frame per
@@ -174,10 +130,8 @@ def _joined(left_df: DataFrame, right_dfs: list[DataFrame],
             *[F.col(c).alias(f"__r{i}_{c}") for c in on.values()],
             *[F.col(src).alias(o) for o, src in r["right_cols"].items()],
         )
-        cond = None
-        for lc, rc in on.items():
-            e = out[lc] == rsel[f"__r{i}_{rc}"]
-            cond = e if cond is None else (cond & e)
+        cond = join_on(((out[lc], rsel[f"__r{i}_{rc}"])
+                        for lc, rc in on.items()), null_safe=False)
         out = out.join(rsel, on=cond, how=r["how"])
     return out.select(*spec["out_cols"])
 
@@ -198,9 +152,8 @@ def create_star_view(
     ``right_cols`` defaults to every dim non-key column under its own
     name; collisions with fact columns or other dims' outputs are errors.
 
-    Like the agg view, bootstrap is two commits (overwrite, then
-    spec+watermarks) — a crash between them leaves no spec and the
-    bootstrap is simply resumed on the next call."""
+    Bootstrap is the shared two-commit, crash-resumable one
+    (``lake/view.py``)."""
     if not rights:
         raise ValueError("rights must name at least one dim table")
     lm = left.manifest()
@@ -262,34 +215,19 @@ def create_star_view(
         "out_cols": [f.name for f in fields],
         "left_location": os.path.abspath(left.location),
     }
-    try:
-        view = LakeTable.create(
-            left.spark, location,
-            schema=T.StructType(fields),
-            key_cols=list(lm.key_cols),
-            bucket_col=lm.key_cols[0],
-            num_buckets=num_buckets,
-        )
-    except FileExistsError:
-        view = LakeTable(left.spark, location)
-        if view.manifest().properties.get(SPEC_PROP) is not None:
-            raise FileExistsError(
-                f"join view already exists at {location}"
-            ) from None
+    view = create_or_resume(
+        left.spark, location, SPEC_PROP, "join view",
+        schema=T.StructType(fields), key_cols=list(lm.key_cols),
+        bucket_col=lm.key_cols[0], num_buckets=num_buckets,
+    )
     lv = left.current_version()
     rvs = [r["table"].current_version() for r in rights]
     if lv > 0:
-        snap_bytes = sum(
-            t._entry_bytes(e)
-            for t in (left, *[r["table"] for r in rights])
-            for es in t.manifest().files.values() for e in es
-        )
-        with _static_planning_if_small(left.spark, snap_bytes):
-            view.overwrite(
-                _joined(left.read(version=lv),
-                        [r["table"].read(version=v)
-                         for r, v in zip(rights, rvs)], spec)
-            )
+        dims = [r["table"] for r in rights]
+        bootstrap_overwrite(view, [(left, lv), *zip(dims, rvs)], lambda: (
+            _joined(left.read(version=lv),
+                    [t.read(version=v) for t, v in zip(dims, rvs)], spec)
+        ))
     view.set_properties(**{
         **_wm_props(lv, rvs),
         SPEC_PROP: json.dumps(spec),
@@ -360,13 +298,13 @@ def star_view_lag(left: LakeTable, rights: list[LakeTable],
                   view: LakeTable) -> dict:
     """Staleness of the view vs every upstream — monitoring surface."""
     spec = _spec(view)
-    _check_tables(spec, left, rights)
+    check_tables(spec, left, rights)
     wl, wrs = _watermarks(view, len(spec["rights"]))
     return {
         "left_watermark": wl,
         "right_watermarks": wrs,
-        "left": left.commit_lag(wl),
-        "rights": [t.commit_lag(w) for t, w in zip(rights, wrs)],
+        "left": lag(left, wl),
+        "rights": [lag(t, w) for t, w in zip(rights, wrs)],
     }
 
 
@@ -398,7 +336,7 @@ def refresh_star_view(
     ``"skip"`` is passed (and then its rewrites are NOT folded, exactly
     like the mirror's contract)."""
     spec = _spec(view)
-    _check_tables(spec, left, rights)
+    check_tables(spec, left, rights)
     wl, wrs = _watermarks(view, len(rights))
     cl = left.current_version()
     crs = [t.current_version() for t in rights]
@@ -407,10 +345,10 @@ def refresh_star_view(
                 "rights": list(zip(wrs, crs)),
                 "affected": 0, "applied": False}
     lkeys = left.manifest().key_cols
-    change_bytes = _changed_bytes(left, wl, cl) + sum(
-        _changed_bytes(t, w, c) for t, w, c in zip(rights, wrs, crs)
+    size = change_bytes(left, wl, cl) + sum(
+        change_bytes(t, w, c) for t, w, c in zip(rights, wrs, crs)
     )
-    with _static_planning_if_small(left.spark, change_bytes):
+    with _static_planning_if_small(left.spark, size):
         # -- affected fact keys ------------------------------------------
         # (a) keys whose own row changed
         aff = None
@@ -427,22 +365,14 @@ def refresh_star_view(
             dr = rt.read_changes(w, c, on_rewrite=on_rewrite)
             rkc = list(on.values())
             touched = dr.select(*rkc).distinct()
-            t_rows = touched.limit(_RESCAN_PUSHDOWN_CAP + 1).collect()
-            few = (len(t_rows) <= _RESCAN_PUSHDOWN_CAP
-                   and not any(v is None for r in t_rows for v in r))
-            push = (
-                [(lc, "in", sorted({r[rc] for r in t_rows}))
-                 for lc, rc in on.items()]
-                if few else None
-            )
+            push = in_pushdown(
+                touched.limit(_RESCAN_PUSHDOWN_CAP + 1).collect(), list(on))
             lscan = left.read(version=cl, where=push)
             tk = touched.select(
                 *[F.col(rc).alias(f"__t_{rc}") for rc in rkc]
             )
-            cond = None
-            for lc, rc in on.items():
-                e = lscan[lc] == F.col(f"__t_{rc}")
-                cond = e if cond is None else (cond & e)
+            cond = join_on(((lscan[lc], F.col(f"__t_{rc}"))
+                            for lc, rc in on.items()), null_safe=False)
             rk_keys = (
                 lscan.join(_bcast(tk), on=cond, how="left_semi")
                 .select(*lkeys).distinct()
@@ -458,22 +388,13 @@ def refresh_star_view(
                 return {"left": (wl, cl),
                         "rights": list(zip(wrs, crs)),
                         "affected": 0, "applied": False}
-            few = (len(a_rows) <= _RESCAN_PUSHDOWN_CAP
-                   and not any(v is None for r in a_rows for v in r))
-            a_push = (
-                [(k, "in", sorted({r[i] for r in a_rows}))
-                 for i, k in enumerate(lkeys)]
-                if few else None
-            )
+            a_push = in_pushdown(a_rows, lkeys)
             # -- recompute just the affected keys ------------------------
             akn = aff.select(
                 *[F.col(k).alias(f"__a_{k}") for k in lkeys]
             )
             lsnap = left.read(version=cl, where=a_push)
-            cond = None
-            for k in lkeys:
-                e = lsnap[k].eqNullSafe(F.col(f"__a_{k}"))
-                cond = e if cond is None else (cond & e)
+            cond = join_on((lsnap[k], F.col(f"__a_{k}")) for k in lkeys)
             cur_rows = lsnap.join(_bcast(akn), on=cond, how="left_semi")
             # each dim snapshot restricted to the fk values actually
             # present among the affected fact rows
@@ -484,10 +405,8 @@ def refresh_star_view(
                     *[F.col(lc).alias(f"__f_{rc}") for lc, rc in on.items()]
                 ).distinct()
                 rsnap = rt.read(version=c)
-                rcond = None
-                for rc in on.values():
-                    e = rsnap[rc] == F.col(f"__f_{rc}")
-                    rcond = e if rcond is None else (rcond & e)
+                rcond = join_on(((rsnap[rc], F.col(f"__f_{rc}"))
+                                 for rc in on.values()), null_safe=False)
                 rdfs.append(rsnap.join(_bcast(fks), on=rcond,
                                        how="left_semi"))
             result = _joined(cur_rows, rdfs, spec)
@@ -495,10 +414,7 @@ def refresh_star_view(
             res_k = result.select(
                 *[F.col(k).alias(f"__g_{k}") for k in lkeys]
             ).distinct()
-            gcond = None
-            for k in lkeys:
-                e = aff[k].eqNullSafe(F.col(f"__g_{k}"))
-                gcond = e if gcond is None else (gcond & e)
+            gcond = join_on((aff[k], F.col(f"__g_{k}")) for k in lkeys)
             gone = aff.join(res_k, on=gcond, how="left_anti")
             vschema = view.schema()
             dels = gone.select(*[

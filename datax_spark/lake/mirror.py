@@ -10,12 +10,9 @@ commit log, so no second extraction pass over the source is needed
 incremental hop is the TableStore change stream,
 ``otsstreamreader/internal/core/RecordProcessor.java:186-248``).
 
-Exactly-once: the mirror stores ``mirror_upstream_version`` (the upstream
-manifest version it has applied through) in its OWN manifest properties, and
-each sync advances it in the SAME atomic commit as the merged data
-(``properties_update`` on ``merge_into``) — a crash between "merge applied"
-and "watermark advanced" is impossible, and the merge's ``batch_id`` replay
-guard makes re-running a completed sync a no-op.
+Exactly-once by the shared view protocol (``lake/view.py``): the mirror
+stores ``mirror_upstream_version`` in its own manifest properties and each
+sync advances it in the same atomic commit as the merged data.
 
 Scale: each sync is O(changed files) — ``read_changes`` selects files by
 manifest diff (no upstream snapshot scan), and the MOR merge into the
@@ -29,6 +26,7 @@ from pyspark.sql import functions as F
 
 from datax_spark.lake.merge import merge_into
 from datax_spark.lake.table import LakeTable
+from datax_spark.lake.view import lag, watermark
 
 WATERMARK_PROP = "mirror_upstream_version"
 _OP = "__mirror_op"
@@ -69,12 +67,8 @@ def bootstrap_mirror(
 def mirror_lag(upstream: LakeTable, mirror: LakeTable) -> dict:
     """Staleness of the mirror vs its upstream: watermark, versions
     behind, and seconds behind (commit-timestamp delta)."""
-    wm = mirror.manifest().properties.get(WATERMARK_PROP)
-    if wm is None:
-        raise ValueError(
-            "mirror has no watermark — create it with bootstrap_mirror()"
-        )
-    return {"mirror_watermark": int(wm), **upstream.commit_lag(int(wm))}
+    wm = watermark(mirror, WATERMARK_PROP, "bootstrap_mirror")
+    return lag(upstream, wm, mirror_watermark=wm)
 
 
 def sync_mirror(
@@ -100,12 +94,7 @@ def sync_mirror(
     correct.  Deletes propagate as tombstones.  Re-running after success
     is a no-op (replay guard); a concurrent upstream commit simply shifts
     to the next sync."""
-    wm = mirror.manifest().properties.get(WATERMARK_PROP)
-    if wm is None:
-        raise ValueError(
-            "mirror has no watermark — create it with bootstrap_mirror()"
-        )
-    from_v = int(wm)
+    from_v = watermark(mirror, WATERMARK_PROP, "bootstrap_mirror")
     to_v = upstream.current_version()
     if to_v <= from_v:
         return {"from_version": from_v, "to_version": from_v,

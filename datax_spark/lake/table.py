@@ -83,6 +83,9 @@ DV_POS_COL = "__pos"
 PRESENT_COL = "__present"
 # File kinds whose rows defer key-merge work to read time.
 DELTA_KINDS = ("delta", "pdelta")
+# Commit operations that rewrite files without changing logical state: the
+# changelog, the changed-bucket set and the view cost model skip them.
+PHYSICAL_OPS = ("create", "properties", "compact", "compact-minor", "rebucket")
 # While a purge (lake/purge.py) rewrites history, this property fences data
 # commits: a racing writer could commit entries referencing pre-purge files
 # that the purge is about to delete.  Property-only commits stay allowed
@@ -1556,6 +1559,30 @@ class LakeTable:
         self._write_manifest(m)
         return m
 
+    def _logical_commits(self, from_version: int, to_version: int):
+        """Yield ``(v, manifest, added)`` for every logical-change commit in
+        ``(from_version, to_version]``, oldest first — the one manifest-diff
+        walk behind the changelog, ``changed_buckets`` and the view cost
+        model.  ``added`` maps bucket id → the entries version ``v`` added,
+        deletion vectors excluded; ``PHYSICAL_OPS`` commits are skipped.
+        Each manifest in the range is parsed once, and ``from_version``
+        only when the first commit after it is logical."""
+        prev: set | None = None
+        for v in range(from_version + 1, to_version + 1):
+            m = self.manifest(v)
+            if m.operation not in PHYSICAL_OPS:
+                if prev is None:
+                    prev = {e[0] for es in self.manifest(v - 1).files.values()
+                            for e in es}
+                added: dict[str, list] = {}
+                for b, entries in m.files.items():
+                    for e in entries:
+                        if e[0] not in prev and not (len(e) > 2
+                                                     and e[2] == "dv"):
+                            added.setdefault(b, []).append(e)
+                yield v, m, added
+            prev = {e[0] for es in m.files.values() for e in es}
+
     def changed_buckets(
         self, from_version: int, to_version: int | None = None
     ) -> list[int] | None:
@@ -1563,36 +1590,23 @@ class LakeTable:
         ``(from_version, to_version]`` — derived purely from the manifest
         diff, ZERO Spark jobs (the metadata-side mate of ``read_changes``:
         bucketed delta/append files land in their keys' bucket, so the
-        added-file bucket set IS the changed-key bucket set).
+        added-file bucket set IS the changed-key bucket set).  Ids are in
+        ``from_version``'s bucket layout.
 
         Returns None ("all buckets") when placement is unknown: a change
-        landed in an unbucketed L0 file, or the bucket count changed
-        inside the range (rebucket) so ids across the range don't map to
-        one layout.  Physical rewrites (compact/rebucket/properties) add
-        no logical change and are skipped, as in ``read_changes``."""
+        landed in an unbucketed L0 file, or in a different bucket count
+        (a rebucket inside the range) so its ids don't map to that layout.
+        Physical rewrites add no logical change and are skipped, as in
+        ``read_changes``."""
         to_v = self.current_version() if to_version is None else to_version
         n_buckets = self.manifest(from_version).num_buckets
         out: set[int] = set()
-        for v in range(from_version + 1, to_v + 1):
-            m = self.manifest(v)
+        for _, m, added in self._logical_commits(from_version, to_v):
             if m.num_buckets != n_buckets:
                 return None  # layout changed mid-range — ids don't map
-            if m.operation in ("create", "properties", "compact", "compact-minor", "rebucket"):
-                continue
-            prev_files = {
-                e[0]
-                for entries in self.manifest(v - 1).files.values()
-                for e in entries
-            }
-            for b, entries in m.files.items():
-                for e in entries:
-                    if e[0] in prev_files:
-                        continue
-                    if len(e) > 2 and e[2] == "dv":
-                        continue
-                    if str(b) == L0_BUCKET:
-                        return None  # unbucketed placement — no pruning
-                    out.add(int(b))
+            if L0_BUCKET in added:
+                return None  # unbucketed placement — no pruning
+            out.update(int(b) for b in added)
         return sorted(out)
 
     # --------------------------------------------------------------- lineage
@@ -1674,86 +1688,87 @@ class LakeTable:
             raise ValueError("on_rewrite must be 'error' or 'skip'")
         to_v = self.current_version() if to_version is None else to_version
         target = self.manifest(to_v).schema
-        change_fields = [
-            T.StructField("_change_type", T.StringType()),
-            T.StructField("_change_lsn", T.LongType()),
-            T.StructField("_commit_version", T.LongType()),
-        ]
         parts: list[DataFrame] = []
-        for v in range(from_version + 1, to_v + 1):
-            m = self.manifest(v)
-            if m.operation in ("create", "properties", "compact", "compact-minor", "rebucket"):
-                continue
-            if m.operation not in ("append", "merge-mor"):
-                if on_rewrite == "skip":
-                    continue
-                raise ValueError(
-                    f"version {v} is a {m.operation!r} commit: its file diff "
-                    "is a state rewrite, not a change stream. Pass "
-                    "on_rewrite='skip' to ignore such commits, or use "
-                    "mode='mor' merges for changelog-readable history."
-                )
-            prev_files = {
-                e[0]
-                for entries in self.manifest(v - 1).files.values()
-                for e in entries
-            }
-            added: dict[tuple[str, str], list[str]] = {}
-            for entries in m.files.values():
-                for e in entries:
-                    if e[0] in prev_files:
-                        continue
-                    kind = e[2] if len(e) > 2 else "base"
-                    if kind == "dv":
-                        continue
-                    if kind == "pdelta":
-                        if on_rewrite == "skip":
-                            continue
-                        raise ValueError(
-                            f"version {v} holds partial-update deltas: a "
-                            "partial row is not a whole-row change record, "
-                            "so emitting it would make downstream mergers "
-                            "null-overwrite preserved columns. compact() "
-                            "first, or pass on_rewrite='skip'."
-                        )
-                    added.setdefault((str(e[1]), kind), []).append(
-                        os.path.join(self.location, e[0])
-                    )
-            for (schema_id, kind), paths in added.items():
-                fs = T.StructType.fromJson(m.schemas[schema_id])
-                if kind == "delta":
-                    fs = T.StructType(
-                        fs.fields
-                        + [
-                            T.StructField(LSN_COL, T.LongType()),
-                            T.StructField(DELETED_COL, T.BooleanType()),
-                        ]
-                    )
-                df = self.spark.read.schema(fs).parquet(*paths)
-                have = {f.name for f in fs.fields}
-                cols = [
-                    (F.col(f.name).cast(f.dataType) if f.name in have
-                     else F.lit(None).cast(f.dataType)).alias(f.name)
-                    for f in target.fields
-                ]
-                if kind == "delta":
-                    cols += [
-                        F.when(F.col(DELETED_COL), F.lit("delete"))
-                        .otherwise(F.lit("upsert"))
-                        .alias("_change_type"),
-                        F.col(LSN_COL).alias("_change_lsn"),
-                    ]
-                else:
-                    cols += [
-                        F.lit("insert").alias("_change_type"),
-                        F.lit(None).cast("long").alias("_change_lsn"),
-                    ]
-                cols.append(F.lit(v).cast("long").alias("_commit_version"))
-                parts.append(df.select(*cols))
-        if not parts:
-            return self.spark.createDataFrame(
-                [], T.StructType(list(target.fields) + change_fields)
+        for v, m, added in self._logical_commits(from_version, to_v):
+            parts += self._commit_changes(v, m, added, target, on_rewrite)
+        return self._union_changes(parts, target)
+
+    def _commit_changes(
+        self, v: int, m: Manifest, added: dict, target: T.StructType,
+        on_rewrite: str,
+    ) -> list[DataFrame]:
+        """Change-row frames of one logical commit, in the ``target`` schema
+        (one frame per added (schema, file kind); none when skipped)."""
+        if m.operation not in ("append", "merge-mor"):
+            if on_rewrite == "skip":
+                return []
+            raise ValueError(
+                f"version {v} is a {m.operation!r} commit: its file diff "
+                "is a state rewrite, not a change stream. Pass "
+                "on_rewrite='skip' to ignore such commits, or use "
+                "mode='mor' merges for changelog-readable history."
             )
+        paths: dict[tuple[str, str], list[str]] = {}
+        for entries in added.values():
+            for e in entries:
+                kind = e[2] if len(e) > 2 else "base"
+                if kind == "pdelta":
+                    if on_rewrite == "skip":
+                        continue
+                    raise ValueError(
+                        f"version {v} holds partial-update deltas: a "
+                        "partial row is not a whole-row change record, "
+                        "so emitting it would make downstream mergers "
+                        "null-overwrite preserved columns. compact() "
+                        "first, or pass on_rewrite='skip'."
+                    )
+                paths.setdefault((str(e[1]), kind), []).append(
+                    os.path.join(self.location, e[0])
+                )
+        parts = []
+        for (schema_id, kind), files in paths.items():
+            fs = T.StructType.fromJson(m.schemas[schema_id])
+            if kind == "delta":
+                fs = T.StructType(
+                    fs.fields
+                    + [
+                        T.StructField(LSN_COL, T.LongType()),
+                        T.StructField(DELETED_COL, T.BooleanType()),
+                    ]
+                )
+            df = self.spark.read.schema(fs).parquet(*files)
+            have = {f.name for f in fs.fields}
+            cols = [
+                (F.col(f.name).cast(f.dataType) if f.name in have
+                 else F.lit(None).cast(f.dataType)).alias(f.name)
+                for f in target.fields
+            ]
+            if kind == "delta":
+                cols += [
+                    F.when(F.col(DELETED_COL), F.lit("delete"))
+                    .otherwise(F.lit("upsert"))
+                    .alias("_change_type"),
+                    F.col(LSN_COL).alias("_change_lsn"),
+                ]
+            else:
+                cols += [
+                    F.lit("insert").alias("_change_type"),
+                    F.lit(None).cast("long").alias("_change_lsn"),
+                ]
+            cols.append(F.lit(v).cast("long").alias("_commit_version"))
+            parts.append(df.select(*cols))
+        return parts
+
+    def _union_changes(
+        self, parts: list[DataFrame], target: T.StructType
+    ) -> DataFrame:
+        if not parts:
+            return self.spark.createDataFrame([], T.StructType(
+                list(target.fields) + [
+                    T.StructField("_change_type", T.StringType()),
+                    T.StructField("_change_lsn", T.LongType()),
+                    T.StructField("_commit_version", T.LongType()),
+                ]))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -1786,18 +1801,19 @@ class LakeTable:
         key set — O(touched buckets of v-1) per commit, never O(table
         history).  For long ranges prefer consuming incrementally (one sync
         per few commits), exactly like the mirror does."""
+        if on_rewrite not in ("error", "skip"):
+            raise ValueError("on_rewrite must be 'error' or 'skip'")
         to_v = self.current_version() if to_version is None else to_version
-        target = self.manifest(to_v).schema
+        mt = self.manifest(to_v)
+        target = mt.schema
         data_cols = [f.name for f in target.fields]
-        key_cols = self.manifest(to_v).key_cols
-        change_fields = [
-            T.StructField("_change_type", T.StringType()),
-            T.StructField("_change_lsn", T.LongType()),
-            T.StructField("_commit_version", T.LongType()),
-        ]
+        key_cols = mt.key_cols
         parts: list[DataFrame] = []
-        for v in range(from_version + 1, to_v + 1):
-            raw = self.read_changes(v - 1, v, on_rewrite=on_rewrite)
+        for v, m, added in self._logical_commits(from_version, to_v):
+            frames = self._commit_changes(v, m, added, target, on_rewrite)
+            if not frames:
+                continue
+            raw = self._union_changes(frames, target)
             # net change per key in this commit: the max-LSN event wins
             # (appends carry no LSN → -1; a commit is append- or
             # merge-typed, never mixed)
@@ -1816,19 +1832,8 @@ class LakeTable:
                 .select(*data_cols, "_change_type", "_change_lsn")
 
             # prior state of the touched buckets only
-            m = self.manifest(v)
-            prev_files = {
-                e[0]
-                for entries in self.manifest(v - 1).files.values()
-                for e in entries
-            }
-            touched = {
-                b
-                for b, entries in m.files.items()
-                if any(e[0] not in prev_files for e in entries)
-            }
-            bks = (None if L0_BUCKET in touched
-                   else [int(b) for b in touched])
+            bks = (None if L0_BUCKET in added
+                   else [int(b) for b in added])
             prev = self.read(version=v - 1, buckets=bks)
             prev_m = prev.select(
                 *[F.col(c).alias(f"__b_{c}") for c in prev.columns],
@@ -1863,14 +1868,7 @@ class LakeTable:
                 emit(after, ~is_del & exists, "update_after"),
                 emit(before, is_del & exists, "delete"),
             ]
-        if not parts:
-            return self.spark.createDataFrame(
-                [], T.StructType(list(target.fields) + change_fields)
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return self._union_changes(parts, target)
 
     def create_view(self, name: str, version: int | None = None) -> None:
         """Register the (reconstructed) snapshot as a temp view so users

@@ -17,7 +17,6 @@ Spark-native shape:
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -99,8 +98,3 @@ def job_report(table: LakeTable) -> dict:
         "table_rows": None,  # filled by caller if a count is affordable
     }
 
-
-def print_report(table: LakeTable) -> str:
-    text = json.dumps(job_report(table), indent=2, default=str)
-    print(text)
-    return text

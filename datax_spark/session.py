@@ -78,8 +78,3 @@ def get_session(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def stop_session() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -487,7 +487,7 @@ def test_recompute_matches_incremental_with_min_max(spark, tmp_path):
 def test_static_planning_toggle_scoped(spark):
     """Small change layers run under AQE-off planning, restored on ANY
     exit (including exceptions); big/unknown layers leave AQE alone."""
-    from datax_spark.lake.aggview import (
+    from datax_spark.lake.view import (
         _STATIC_PLAN_MAX_BYTES,
         _static_planning_if_small,
     )
@@ -510,3 +510,51 @@ def test_static_planning_toggle_scoped(spark):
         assert spark.conf.get(key) == before
     with _static_planning_if_small(spark, None):
         assert spark.conf.get(key) == before
+
+
+def test_minor_compaction_is_not_churn(spark, tmp_path):
+    """compact_minor rewrites delta files without changing logical state:
+    the cost model must not count the rewrite as churn, so a small batch
+    followed by a minor compaction still refreshes incrementally."""
+    up = _mk(spark, tmp_path)
+    merge_into(up, spark.range(20000).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("g"), (F.col("id") % 10).cast("string")).alias("grp"),
+        F.col("id").alias("v"),
+        (F.col("id") + 1).alias("lsn"),
+        F.lit("insert").alias("op"),
+    ), op_col="op", order_col="lsn", mode="mor", auto_compact=None)
+    view = create_agg_view(up, str(tmp_path / "vw"), dims=["grp"], sums=["v"])
+    _apply(spark, up, [(k, "g0" if k % 2 else "h", -k, 30000 + k, "insert")
+                       for k in range(0, 500, 10)])
+    assert up.compact_minor() is not None
+    r = _refresh_any(up, view)
+    assert r["mode"] == "incremental"
+    assert _view_state(view) == _direct(up)
+
+
+
+def test_refresh_after_snapshot_expiry(spark, tmp_path):
+    """expire_snapshots drops old manifests: the churn floor's history
+    walk reads only the versions kept, so an agg refresh still works
+    wherever a mirror over the same upstream syncs."""
+    from datax_spark.lake.mirror import bootstrap_mirror, sync_mirror
+
+    up = _mk(spark, tmp_path)
+    for b in range(4):
+        _apply(spark, up, [(k, f"g{k % 3}", k + b, 10 * b + k, "insert")
+                           for k in range(b, 8 + b)])
+    view = create_agg_view(up, str(tmp_path / "vw"), dims=["grp"], sums=["v"])
+    mirror = bootstrap_mirror(up, str(tmp_path / "mir"))
+    _apply(spark, up, [(1, "g2", 100, 100, "insert"),
+                       (2, "", 0, 101, "delete")])
+    up.expire_snapshots(keep_versions=2)
+    assert int(view.manifest().properties[WATERMARK_PROP]) == 4
+    assert up.current_version() == 5
+    assert sync_mirror(up, mirror)["applied"]
+    assert _refresh_any(up, view)["applied"]
+    assert _view_state(view) == _direct(up)
+    # the forced-incremental path too, on the next batch
+    _apply(spark, up, [(3, "g0", 7, 102, "insert")])
+    assert refresh_agg_view(up, view)["mode"] == "incremental"
+    assert _view_state(view) == _direct(up)

@@ -1072,3 +1072,19 @@ def test_flatten_dim_composes_three_hop_chain(spark, tmp_path):
     refresh_flattened_dim(dim, [pflat], dflat)
     refresh_star_view(fact, [dflat], star)
     assert got() == expect()
+
+
+def test_refresh_through_symlinked_fact(spark, tmp_path):
+    """The identity pin resolves symlinks: the fact table opened through a
+    link to its directory is the table the view was created over."""
+    import os
+
+    fact, dim = _mk(spark, tmp_path)
+    _merge_dim(dim, [(1, "A", "insert")], lsn0=0)
+    _merge_fact(fact, [(10, 1, 100, "insert")], lsn0=0)
+    view = create_join_view(fact, dim, str(tmp_path / "v"), on={"fk": "dk"})
+    os.symlink(fact.location, str(tmp_path / "fact_link"))
+    linked = LakeTable(spark, str(tmp_path / "fact_link"))
+    _merge_fact(linked, [(11, 1, 200, "insert")], lsn0=10)
+    assert refresh_join_view(linked, dim, view)["applied"]
+    assert _state(view) == _expected(fact, dim, "inner")
